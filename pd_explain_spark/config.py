@@ -6,6 +6,15 @@ Our default is OFF — full-data fidelity is the Spark engine's value-add
 (BASELINE.md §3 budgets full-data explain at <= 30 s) — but the same
 switch exists for reference-parity latency, and explainers that take a
 ``use_sampling`` kwarg default to this global when the kwarg is omitted.
+
+What the switch changes: full-data mode runs the distributed kernels
+(one explode/groupBy dual histogram, batched rule aggregates). Sampled
+mode runs ONE Spark projection + Arrow collect per sampled input (the
+seeded ``deterministic_sample`` of at most ``sample_size`` rows), then
+FEDEX and many-to-one profile, bin and score that frame in driver numpy;
+sampled profiles count exact distinct values (the reference's
+``nunique``) where the Spark profile uses HLL. A join's full result
+histogram and many-to-one's label counts stay Spark jobs.
 """
 
 from __future__ import annotations

@@ -17,9 +17,14 @@ Semantics recovered from the reference (SURVEY.md §2.4):
    (explainer_factory.py:24-25) — for 2 players the Shapley value is the
    averaged marginal, i.e. each side's own deviation share.
 
-Spark design: all heavy work is the single-pass dual histogram
-(histograms.py); scoring runs driver-side on the tiny
-(n_cols x n_bins) frame. Group-by diversity aggregates the (already
+Spark design: in full-data mode all heavy work is the single-pass dual
+histogram (histograms.py); scoring runs driver-side on the tiny
+(n_cols x n_bins) frame. In sampled mode (``use_sampling``) each sampled
+input is ONE Spark projection + Arrow collect of its <= sample_size
+rows (``collect_samples``), and profiling (exact distinct counts, the
+reference's rule), |corr| pruning, binning, the dual histograms and the
+Shapley-filter sums run in driver numpy; only a join's full RESULT
+histogram stays a Spark job. Group-by diversity aggregates the (already
 small) grouped result; top groups found with sort-limit, never a full
 collect.
 """
@@ -28,25 +33,31 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import checkpoint_df
-
 from ..core.operations import FilterOp, GroupByOp, JoinOp
 from ..operators.aggregates import is_numeric_type
-from ..operators.sampling import maybe_sample
 from .base import Explanation, ExplanationItem, ExplainerBase
 from .histograms import (
-    NULL_TOKEN,
     ColumnProfile,
+    LocalSample,
     bin_label,
+    collect_samples,
     dual_histogram_predicate,
     dual_histogram_union,
+    local_dual_histogram_predicate,
+    local_histogram,
+    local_profile_columns,
+    make_profile,
+    merge_histograms,
     profile_columns,
-    shapley_dual_histograms,
+    result_bindings,
+    result_histogram,
     shapley_dual_histograms_weighted,
 )
 
@@ -118,17 +129,10 @@ class FedexExplainer(ExplainerBase):
             return [c for c in self.attributes if c in df.columns]
         return [c for c in df.columns if c not in exclude and c not in self.ignore]
 
-    def _maybe_sample(self, df: DataFrame) -> DataFrame:
-        out = maybe_sample(df, self.use_sampling, self.sample_size, RANDOM_SEED)
-        if self.use_sampling:
-            # the <= sample_size-row sample feeds several jobs (profile +
-            # corr pruning, the dual histogram, scoring); localCheckpoint
-            # materializes the TakeOrdered-over-the-source subtree ONCE
-            # instead of rescanning the full table per consumer — measured
-            # ~2x on the filter explainer at sf0.1. Bounded blocks, freed
-            # by the ContextCleaner when the explanation is built.
-            out = out.transform(checkpoint_df)
-        return out
+    def _collect(self, inputs) -> list[LocalSample]:
+        """The sampled inputs, collected in one Spark job (see
+        ``collect_samples``)."""
+        return collect_samples(inputs, self.sample_size, RANDOM_SEED)
 
     def _profile_and_corr(
         self, df: DataFrame, anchor: str | None, candidates: list[str]
@@ -169,28 +173,76 @@ class FedexExplainer(ExplainerBase):
             and abs(row[f"{c}__corr"]) >= self.corr_TH
         }
         profiles: dict[str, ColumnProfile] = {}
-        cat_cap = 60  # mirrors profile_columns' default
         for c in candidates:
             if c in corr:
                 continue
-            distinct = row[f"{c}__d"] or 0
-            numeric_dtype = is_numeric_type(schema[c])
-            is_num = numeric_dtype and distinct > 6
-            prof = ColumnProfile(name=c, is_numeric=is_num, distinct=distinct)
-            if numeric_dtype:
-                prof.vmin, prof.vmax = row.get(f"{c}__lo"), row.get(f"{c}__hi")
-            if not is_num and distinct > cat_cap:
-                continue
-            profiles[c] = prof
+            prof = make_profile(
+                c, is_numeric_type(schema[c]), row[f"{c}__d"] or 0,
+                row.get(f"{c}__lo"), row.get(f"{c}__hi"),
+            )
+            if prof is not None:
+                profiles[c] = prof
         return profiles, corr
 
-    def _explain_filter(self) -> Explanation:
+    def _profile_and_corr_local(
+        self, sample: LocalSample, anchor: str | None, candidates: list[str]
+    ) -> tuple[dict[str, ColumnProfile], dict[str, float]]:
+        """``_profile_and_corr`` over the collected sample."""
+        corr = {}
+        if anchor in sample.values:
+            for c in candidates:
+                if c != anchor and c in sample.values:
+                    r = _pearson(sample, anchor, c)
+                    if r is not None and abs(r) >= self.corr_TH:
+                        corr[c] = r
+        profiles = local_profile_columns(sample, [c for c in candidates if c not in corr])
+        return profiles, corr
+
+    def _filter_candidates(self) -> tuple[set[str], list[str]]:
         op: FilterOp = self.op
-        source = self._maybe_sample(op.source)
         filter_cols = set(op.predicate.columns()) if op.predicate else {op.attribute}
-        candidates = self._candidate_columns(source, exclude=filter_cols)
+        return filter_cols, self._candidate_columns(op.source, exclude=filter_cols)
+
+    def _collect_filter_sample(
+        self, extra: dict | None = None
+    ) -> tuple[LocalSample, list[str]]:
+        """The sampled source in one collect: the candidates, the filter
+        attribute (the |corr| anchor), the recorded predicate as
+        ``__keep`` and any ``extra`` expressions."""
+        op: FilterOp = self.op
+        _, candidates = self._filter_candidates()
+        cols = list(candidates)
+        if op.attribute in op.source.columns and op.attribute not in cols:
+            cols.append(op.attribute)
+        extra = {"__keep": op.predicate.to_spark(op.source), **(extra or {})}
+        [sample] = self._collect([(op.source, cols, extra)])
+        return sample, candidates
+
+    def _explain_filter_local(self, sample: LocalSample, candidates: list[str]) -> Explanation:
+        op: FilterOp = self.op
+        profiles, corr = self._profile_and_corr_local(sample, op.attribute, candidates)
+        if not profiles:
+            return Explanation(kind="fedex-filter", query=op.query_string())
+        hist = local_dual_histogram_predicate(sample, sample.where("__keep"), profiles, self.n_bins)
+        return self._filter_explanation(hist, profiles, corr)
+
+    def _filter_explanation(self, hist, profiles, corr) -> Explanation:
+        op: FilterOp = self.op
+        items, scores = self._score_histogram(hist, profiles, side=None)
+        exp = Explanation(
+            kind="fedex-filter", query=op.query_string(), items=items[: self.top_k], scores=scores
+        )
+        exp.extras["cor_deleted_atts"] = corr
+        return exp
+
+    def _explain_filter(self) -> Explanation:
+        if self.use_sampling:
+            return self._explain_filter_local(*self._collect_filter_sample())
+        op: FilterOp = self.op
+        source = op.source
+        filter_cols, candidates = self._filter_candidates()
         released = None
-        if not self.use_sampling and candidates:
+        if candidates:
             # full-data mode consumes the source twice (profile+corr
             # agg, then the dual histogram) and both partial aggregates
             # run inside the SCAN stage — on a low-split input (single
@@ -198,8 +250,7 @@ class FedexExplainer(ExplainerBase):
             # Fan out + lazily persist the projected source: the
             # profile agg populates the cache in its own (now parallel)
             # job and the histogram reads cached blocks (guide
-            # §2.2/§5). Sampling mode already checkpoints its <= 5k-row
-            # sample in _maybe_sample.
+            # §2.2/§5).
             from pyspark.storagelevel import StorageLevel
 
             from ..operators.partitioning import fan_out
@@ -228,12 +279,7 @@ class FedexExplainer(ExplainerBase):
             # consumers of the cached projection
             if released is not None:
                 released.unpersist()
-        items, scores = self._score_histogram(hist, profiles, side=None)
-        exp = Explanation(
-            kind="fedex-filter", query=op.query_string(), items=items[: self.top_k], scores=scores
-        )
-        exp.extras["cor_deleted_atts"] = corr
-        return exp
+        return self._filter_explanation(hist, profiles, corr)
 
     # ------------------------------------------------------------------
     # E1 join / E3 shapley
@@ -244,40 +290,78 @@ class FedexExplainer(ExplainerBase):
             return op.right, op.right_name
         return op.left, op.left_name
 
+    def _sampled_join_histogram(self, sides) -> pd.DataFrame:
+        """Dual histogram of sampled join sides against the FULL recorded
+        result: src counts from each collected side sample, res counts
+        from ONE grouped Spark job over the result covering every side.
+        ``sides`` are (attribute prefix, sample, profiles, result rename)."""
+        result = self.op.result
+        src, bindings = [], []
+        for prefix, sample, profiles, rename in sides:
+            own = [(prefix + c, c, p) for c, p in profiles.items()]
+            src.append(local_histogram(sample, own, self.n_bins, {"src_cnt": None}))
+            bindings += result_bindings(profiles, result.columns, rename, prefix)
+        res = result_histogram(result, bindings, self.n_bins)
+        return merge_histograms(pd.concat(src, ignore_index=True), res)
+
     def _explain_join(self, consider: str) -> Explanation:
         op: JoinOp = self.op
         side_df, side_name = self._join_side(consider)
-        side_df = self._maybe_sample(side_df)
         candidates = self._candidate_columns(side_df, exclude=set(op.on))
-        profiles = profile_columns(side_df, candidates)
-        if not profiles:
-            return Explanation(kind="fedex-join", query=op.query_string())
         rename = {c: f"{side_name}_{c}" for c in candidates}
-        hist = dual_histogram_union(side_df, op.result, profiles, self.n_bins, result_rename=rename)
+        if self.use_sampling:
+            profiles = {}
+            if candidates:
+                [sample] = self._collect([(side_df, candidates, {})])
+                profiles = local_profile_columns(sample, candidates)
+            if not profiles:
+                return Explanation(kind="fedex-join", query=op.query_string())
+            hist = self._sampled_join_histogram([("", sample, profiles, rename)])
+        else:
+            profiles = profile_columns(side_df, candidates)
+            if not profiles:
+                return Explanation(kind="fedex-join", query=op.query_string())
+            hist = dual_histogram_union(side_df, op.result, profiles, self.n_bins, result_rename=rename)
         items, scores = self._score_histogram(hist, profiles, side=consider)
         return Explanation(
             kind="fedex-join", query=op.query_string(), items=items[: self.top_k], scores=scores
         )
 
-    def _explain_shapley(self) -> Explanation:
-        """2-player Shapley: each side's value is its own marginal
-        deviation. Both sides' dual histograms run as ONE Spark job
-        (``shapley_dual_histograms``): the per-side flavor recomputed
-        and rescanned the join RESULT twice — the dominant cost of this
-        pipeline at sf0.1 (VERDICT r10 task #6). Scores, tie-breaks, and
-        rendered text are unchanged: identical profiles, identical
-        per-(attribute, bin) counts, same ``_score_histogram``."""
+    def _shapley_histogram_sampled(self):
+        """Both sides' samples in ONE collect, both sides' result counts
+        in ONE grouped job over the recorded result (the sampled sides
+        are compared against the FULL result, so multiplicity weights of
+        the sample would not reproduce it)."""
+        op: JoinOp = self.op
+        sides = []
+        for consider in ("left", "right"):
+            df, name = self._join_side(consider)
+            sides.append((consider, df, name, self._candidate_columns(df, exclude=set(op.on))))
+        samples = self._collect([(df, cands, {}) for _, df, _, cands in sides])
+        lp, rp = profiles = [
+            local_profile_columns(sample, side[3]) for sample, side in zip(samples, sides)
+        ]
+        if not (lp or rp):
+            return lp, rp, None
+        hist = self._sampled_join_histogram([
+            (f"{consider}:", sample, prof, {c: f"{name}_{c}" for c in cands})
+            for (consider, _, name, cands), sample, prof in zip(sides, samples, profiles)
+        ])
+        return lp, rp, hist
+
+    def _shapley_histogram_full(self):
+        """Full-data flavor: both sides' histograms from their join-key
+        multiplicities (``shapley_dual_histograms_weighted``) — the join
+        result is never rebuilt."""
         from ..operators.partitioning import fan_out
 
         op: JoinOp = self.op
-        rebuild = not self.use_sampling
         released: list = []
 
         def _prep(consider: str):
-            side_df, side_name = self._join_side(consider)
-            side_df = self._maybe_sample(side_df)
+            side_df, _ = self._join_side(consider)
             candidates = self._candidate_columns(side_df, exclude=set(op.on))
-            if candidates and rebuild:
+            if candidates:
                 # the profile agg, the histogram branch, AND the other
                 # side's key-count table all consume this side: persist
                 # the narrow fanned projection (+ join keys) so every
@@ -287,8 +371,7 @@ class FedexExplainer(ExplainerBase):
                 # checkpoint): the profile aggregate below is the first
                 # consumer and populates the cache inside its own job —
                 # one full materialization pass per side deleted from
-                # the pipeline. Sampling mode already checkpoints
-                # inside _maybe_sample; blocks are unpersisted once the
+                # the pipeline. Blocks are unpersisted once the
                 # histograms are collected.
                 from pyspark.storagelevel import StorageLevel
 
@@ -297,56 +380,54 @@ class FedexExplainer(ExplainerBase):
                     StorageLevel.MEMORY_AND_DISK
                 )
                 released.append(side_df)
-            profiles = profile_columns(side_df, candidates)
-            rename = {c: f"{side_name}_{c}" for c in candidates}
-            return (side_df, profiles, rename)
+            return side_df, profile_columns(side_df, candidates)
 
-        # the two sides are independent single-job pipelines — overlap
-        # them (guide §2.6): the second side's scan back-fills executor
-        # slots freed by the first side's tail
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut = {c: pool.submit(_prep, c) for c in ("left", "right")}
-            prepped = {c: f.result() for c, f in fut.items()}
-        left_df, lp, lr = prepped["left"]
-        right_df, rp, rr = prepped["right"]
-        per_side: dict[str, tuple[list, dict]] = {}
         # try/finally: a histogram job that throws must still release the
         # lazily persisted side projections (r12 VERDICT wart #4 — the
         # blocks otherwise leak until the ContextCleaner)
         try:
-            if lp or rp:
-                if rebuild:
-                    # weighted flavor: result-side counts derive from each
-                    # side's join-key multiplicities — the rebuilt-join +
-                    # third-explode branch this pipeline used to run is
-                    # gone entirely (identical counts; see
-                    # shapley_dual_histograms_weighted)
-                    hist = shapley_dual_histograms_weighted(
-                        left_df, right_df, list(op.on), op.how, lp, rp, self.n_bins
-                    )
-                else:
-                    # sampling mode compares SAMPLED sides against the FULL
-                    # recorded result — multiplicity weights of the sample
-                    # would not reproduce that, so it keeps the union flavor
-                    hist = shapley_dual_histograms(
-                        left_df, right_df, op.result, lp, rp, self.n_bins,
-                        left_rename=lr, right_rename=rr,
-                    )
-                for consider, profiles in (("left", lp), ("right", rp)):
-                    prefix = f"{consider}:"
-                    sub = hist[hist["attribute"].str.startswith(prefix)].copy()
-                    sub["attribute"] = sub["attribute"].str[len(prefix):]
-                    per_side[consider] = self._score_histogram(
-                        sub, profiles, side=consider
-                    )
+            # the two sides are independent single-job pipelines — overlap
+            # them (guide §2.6): the second side's scan back-fills executor
+            # slots freed by the first side's tail
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                fut = {c: pool.submit(_prep, c) for c in ("left", "right")}
+                (left_df, lp), (right_df, rp) = (fut[c].result() for c in ("left", "right"))
+            if not (lp or rp):
+                return lp, rp, None
+            # weighted flavor: result-side counts derive from each side's
+            # join-key multiplicities — no rebuilt join, no third explode
+            # (identical counts; see shapley_dual_histograms_weighted)
+            hist = shapley_dual_histograms_weighted(
+                left_df, right_df, list(op.on), op.how, lp, rp, self.n_bins
+            )
+            return lp, rp, hist
         finally:
             # the histograms are collected (pandas) — the cached side
             # projections have no further consumers
             for df in released:
                 df.unpersist()
-            released.clear()
+
+    def _explain_shapley(self) -> Explanation:
+        """2-player Shapley: each side's value is its own marginal
+        deviation, scored from one dual histogram covering both sides
+        (attributes prefixed ``left:``/``right:`` — the per-side flavor
+        recomputed and rescanned the join RESULT twice, VERDICT r10 task
+        #6). Scores, tie-breaks, and rendered text come from the same
+        ``_score_histogram`` as the one-sided join."""
+        op: JoinOp = self.op
+        if self.use_sampling:
+            lp, rp, hist = self._shapley_histogram_sampled()
+        else:
+            lp, rp, hist = self._shapley_histogram_full()
+        per_side: dict[str, tuple[list, dict]] = {}
+        if hist is not None:
+            for consider, profiles in (("left", lp), ("right", rp)):
+                prefix = f"{consider}:"
+                sub = hist[hist["attribute"].str.startswith(prefix)].copy()
+                sub["attribute"] = sub["attribute"].str[len(prefix):]
+                per_side[consider] = self._score_histogram(sub, profiles, side=consider)
         l_items, l_scores = per_side.get("left", ([], {}))
         r_items, r_scores = per_side.get("right", ([], {}))
         left = Explanation(kind="fedex-join", query=op.query_string(),
@@ -384,7 +465,7 @@ class FedexExplainer(ExplainerBase):
         (explainer_factory.py:24-25, explainable_data_frame.py:1090,1242).
         """
         op: FilterOp = self.op
-        source = self._maybe_sample(op.source)
+        source = op.source
         schema = {f.name: f.dataType for f in source.schema.fields}
         attr = self.attr
         if attr is None:
@@ -401,29 +482,30 @@ class FedexExplainer(ExplainerBase):
         agg = (self.value or "mean").lower()
         if agg not in ("mean", "sum", "count"):
             raise ValueError(f"shapley filter value must be mean/sum/count, got {agg!r}")
-        pred = op.predicate.to_spark(source)
         v = F.col(attr).cast("double")
-        row = source.agg(
-            F.sum(F.when(pred, v)).alias("sm_k"),
-            F.count(F.when(pred, v)).alias("nn_k"),
-            F.sum(F.when(~pred, v)).alias("sm_r"),
-            F.count(F.when(~pred, v)).alias("nn_r"),
-        ).first()
-        sm_k, nn_k = float(row["sm_k"] or 0.0), float(row["nn_k"] or 0)
-        sm_r, nn_r = float(row["sm_r"] or 0.0), float(row["nn_r"] or 0)
-
-        def val(sm: float, nn: float) -> float:
-            if agg == "sum":
-                return sm
-            if agg == "count":
-                return nn
-            return sm / nn if nn else 0.0
-
-        v_kept, v_removed = val(sm_k, nn_k), val(sm_r, nn_r)
-        v_all = val(sm_k + sm_r, nn_k + nn_r)
-        phi_kept = 0.5 * v_kept + 0.5 * (v_all - v_removed)
-        phi_removed = 0.5 * v_removed + 0.5 * (v_all - v_kept)
-        base = self._explain_filter()
+        if self.use_sampling:
+            # ONE collect feeds both the Shapley terms and the deviation
+            # histogram
+            sample, candidates = self._collect_filter_sample({"__value": v})
+            value = sample.extra["__value"]
+            has_v = pc.is_valid(value).to_numpy(zero_copy_only=False)
+            vals = value.to_numpy()
+            kept, removed = sample.where("__keep") & has_v, sample.where("__keep", False) & has_v
+            terms = (
+                _spark_sum(vals[kept]), float(kept.sum()),
+                _spark_sum(vals[removed]), float(removed.sum()),
+            )
+            base = self._explain_filter_local(sample, candidates)
+        else:
+            pred = op.predicate.to_spark(source)
+            row = source.agg(
+                F.sum(F.when(pred, v)).alias("sm_k"),
+                F.count(F.when(pred, v)).alias("nn_k"),
+                F.sum(F.when(~pred, v)).alias("sm_r"),
+                F.count(F.when(~pred, v)).alias("nn_r"),
+            ).first()
+            terms = _row_terms(row)
+            base = self._explain_filter()
         exp = Explanation(
             kind="fedex-shapley-filter",
             query=op.query_string(),
@@ -431,14 +513,7 @@ class FedexExplainer(ExplainerBase):
             scores=base.scores,
         )
         exp.extras["cor_deleted_atts"] = base.extras.get("cor_deleted_atts", {})
-        exp.extras["shapley"] = {
-            "measure": f"{agg}({attr})",
-            "kept": phi_kept,
-            "removed": phi_removed,
-            "v_all": v_all,
-            "v_kept": v_kept,
-            "v_removed": v_removed,
-        }
+        exp.extras["shapley"] = {"measure": f"{agg}({attr})", **_shapley_values(agg, *terms)}
         return exp
 
     # ------------------------------------------------------------------
@@ -603,6 +678,53 @@ class FedexExplainer(ExplainerBase):
         return float(0.5 * np.sum(np.abs(src / s_tot - res / r_tot)))
 
 
+def _pearson(sample: LocalSample, x: str, y: str) -> float | None:
+    """Spark's CORR(x, y) over the rows where both are non-NULL; None
+    when it is undefined (fewer than two rows, a constant column, NaN)."""
+    both = sample.valid[x] & sample.valid[y]
+    if both.sum() < 2:
+        return None
+    a, b = sample.values[x][both], sample.values[y][both]
+    a, b = a - a.mean(), b - b.mean()
+    with np.errstate(invalid="ignore", divide="ignore"):
+        r = float((a * b).sum() / np.sqrt((a * a).sum() * (b * b).sum()))
+    return r if math.isfinite(r) else None
+
+
+def _spark_sum(v: np.ndarray) -> float:
+    """SUM the way Spark's aggregate over the one-partition sample adds:
+    from 0.0, one row at a time in sample order (not numpy's pairwise
+    sum), so the Shapley terms match the Spark path bit for bit."""
+    return float(np.add.accumulate(np.concatenate(([0.0], v)))[-1])
+
+
+def _row_terms(row) -> tuple[float, float, float, float]:
+    """(sum kept, count kept, sum removed, count removed) of a Spark row."""
+    return (float(row["sm_k"] or 0.0), float(row["nn_k"] or 0),
+            float(row["sm_r"] or 0.0), float(row["nn_r"] or 0))
+
+
+def _shapley_values(agg: str, sm_k: float, nn_k: float, sm_r: float, nn_r: float) -> dict:
+    """Exact 2-player Shapley over {kept, removed} for measure ``agg``."""
+
+    def val(sm: float, nn: float) -> float:
+        if agg == "sum":
+            return sm
+        if agg == "count":
+            return nn
+        return sm / nn if nn else 0.0
+
+    v_kept, v_removed = val(sm_k, nn_k), val(sm_r, nn_r)
+    v_all = val(sm_k + sm_r, nn_k + nn_r)
+    return {
+        "kept": 0.5 * v_kept + 0.5 * (v_all - v_removed),
+        "removed": 0.5 * v_removed + 0.5 * (v_all - v_kept),
+        "v_all": v_all,
+        "v_kept": v_kept,
+        "v_removed": v_removed,
+    }
+
+
 def filter_kernel_table(
     frame, attributes: list[str], n_bins: int = DEFAULT_N_BINS
 ) -> DataFrame:
@@ -737,25 +859,12 @@ def shapley_filter_kernel_table(frame, attr: str, value: str = "mean") -> DataFr
         F.sum(F.when(~pred, v)).alias("sm_r"),
         F.count(F.when(~pred, v)).alias("nn_r"),
     ).first()
-    sm_k, nn_k = float(row["sm_k"] or 0.0), float(row["nn_k"] or 0)
-    sm_r, nn_r = float(row["sm_r"] or 0.0), float(row["nn_r"] or 0)
-
-    def val(sm: float, nn: float) -> float:
-        if agg == "sum":
-            return sm
-        if agg == "count":
-            return nn
-        return sm / nn if nn else 0.0
-
-    v_kept, v_removed = val(sm_k, nn_k), val(sm_r, nn_r)
-    v_all = val(sm_k + sm_r, nn_k + nn_r)
-    phi_kept = 0.5 * v_kept + 0.5 * (v_all - v_removed)
-    phi_removed = 0.5 * v_removed + 0.5 * (v_all - v_kept)
+    sv = _shapley_values(agg, *_row_terms(row))
     spark = source.sparkSession
     return spark.createDataFrame(
         [
-            ("kept", round(v_kept, 6), round(phi_kept, 6)),
-            ("removed", round(v_removed, 6), round(phi_removed, 6)),
+            ("kept", round(sv["v_kept"], 6), round(sv["kept"], 6)),
+            ("removed", round(sv["v_removed"], 6), round(sv["removed"], 6)),
         ],
         schema="player string, value double, shapley double",
     )

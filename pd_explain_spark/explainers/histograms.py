@@ -20,17 +20,34 @@ Binning: numeric columns (nunique > 6, the reference's rule,
 metainsight_explainer.py:509-510) get equi-width bins from a profile
 pass; everything else low-cardinality is its own category; very
 high-cardinality strings are skipped (reference caps categories too).
+
+Sampled inputs (``use_sampling=True``) are at most ``sample_size`` rows,
+so Spark's per-job planning and codegen would dominate every pass over
+them. ``collect_samples`` runs ONE Spark projection per call over
+``deterministic_sample(...)`` and collects it through Arrow; the local
+twins below (``local_profile_columns``, ``local_dual_histogram_predicate``,
+``local_dual_histogram_union``) then profile and bin it in numpy with the
+same bin keys as ``_bin_expr_col``. Local profiles count EXACT distinct
+values (the reference's pandas ``nunique`` rule); the Spark profile uses
+HLL (``approx_count_distinct``). Only full-data work stays in Spark: a
+join RESULT's histogram (``result_histogram``).
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import is_numeric_type
+from ..operators.sampling import deterministic_sample, sql_ident, sql_literal
 
 NULL_TOKEN = "(null)"
 
@@ -52,6 +69,22 @@ class ColumnProfile:
         return [lo + (hi - lo) * i / n_bins for i in range(n_bins + 1)]
 
 
+def make_profile(
+    name: str, numeric_dtype: bool, distinct: int, vmin, vmax, cat_cap: int = 60
+) -> ColumnProfile | None:
+    """The profile rule shared by every profiling pass: numeric treatment
+    iff numeric dtype AND nunique > 6 (the reference's rule); None for a
+    high-cardinality categorical (skipped — the reference caps
+    categories too)."""
+    is_num = numeric_dtype and distinct > 6
+    if not is_num and distinct > cat_cap:
+        return None
+    prof = ColumnProfile(name=name, is_numeric=is_num, distinct=distinct)
+    if numeric_dtype:
+        prof.vmin, prof.vmax = vmin, vmax
+    return prof
+
+
 def profile_columns(df: DataFrame, columns: list[str], cat_cap: int = 60) -> dict[str, ColumnProfile]:
     """ONE aggregation computing approx distinct + min/max for all columns."""
     schema = {f.name: f.dataType for f in df.schema.fields}
@@ -64,16 +97,12 @@ def profile_columns(df: DataFrame, columns: list[str], cat_cap: int = 60) -> dic
     row = df.agg(*exprs).first().asDict()
     out: dict[str, ColumnProfile] = {}
     for c in columns:
-        distinct = row[f"{c}__d"] or 0
-        numeric_dtype = is_numeric_type(schema[c])
-        # the reference's rule: numeric treatment iff numeric dtype AND nunique > 6
-        is_num = numeric_dtype and distinct > 6
-        prof = ColumnProfile(name=c, is_numeric=is_num, distinct=distinct)
-        if numeric_dtype:
-            prof.vmin, prof.vmax = row.get(f"{c}__lo"), row.get(f"{c}__hi")
-        if not is_num and distinct > cat_cap:
-            continue  # high-cardinality categorical: skip (ref caps categories)
-        out[c] = prof
+        prof = make_profile(
+            c, is_numeric_type(schema[c]), row[f"{c}__d"] or 0,
+            row.get(f"{c}__lo"), row.get(f"{c}__hi"), cat_cap,
+        )
+        if prof is not None:
+            out[c] = prof
     return out
 
 
@@ -102,6 +131,23 @@ def _bin_expr_col(c: Column, prof: ColumnProfile, n_bins: int) -> Column:
         )
         return F.when(c.isNull(), F.lit(NULL_TOKEN)).otherwise(F.lpad(idx.cast("string"), 4, "0"))
     return F.coalesce(c.cast("string"), F.lit(NULL_TOKEN))
+
+
+def _bin_sql(column: str, prof: ColumnProfile, n_bins: int) -> str:
+    """``_bin_expr_col`` as SQL text over column ``column`` — the same
+    expression, parsed once on the JVM instead of built one py4j round
+    trip per operator. ``CAST('<repr>' AS DOUBLE)`` folds to the exact
+    double the Column form carries as a literal."""
+    c = sql_ident(column)
+    edges = prof.bin_edges(n_bins)
+    if not (prof.is_numeric and edges is not None):
+        return f"coalesce(CAST({c} AS STRING), '{NULL_TOKEN}')"
+    lo, hi = float(prof.vmin), float(prof.vmax)
+    idx = (
+        f"least({n_bins - 1}, greatest(0, floor((CAST({c} AS DOUBLE) - CAST('{lo!r}' AS DOUBLE))"
+        f" * {n_bins} / CAST('{hi - lo!r}' AS DOUBLE))))"
+    )
+    return f"CASE WHEN {c} IS NULL THEN '{NULL_TOKEN}' ELSE lpad(CAST({idx} AS STRING), 4, '0') END"
 
 
 def dual_histogram_predicate_df(
@@ -188,6 +234,223 @@ def dual_histogram_union(
     return dual_histogram_union_df(
         source, result, profiles, n_bins, result_rename=result_rename
     ).toPandas()
+
+
+# ---------------------------------------------------------------------------
+# sampled inputs: one Arrow collect, then the driver-side twins
+# ---------------------------------------------------------------------------
+
+
+@dataclass
+class LocalSample:
+    """One sampled input on the driver, rows in sample order. Per
+    collected column: ``keys`` is Spark's ``CAST(c AS STRING)`` with NULL
+    as ``NULL_TOKEN`` (the categorical bin key) and ``distinct`` its exact
+    non-NULL distinct count; numeric dtypes add ``values``
+    (``CAST(c AS DOUBLE)``, NaN where NULL) and ``valid`` (the non-NULL
+    mask — a NaN value stays distinct from NULL). ``extra`` holds the
+    extra projected expressions as Arrow arrays."""
+
+    n_rows: int
+    keys: dict[str, np.ndarray] = field(default_factory=dict)
+    distinct: dict[str, int] = field(default_factory=dict)
+    values: dict[str, np.ndarray] = field(default_factory=dict)
+    valid: dict[str, np.ndarray] = field(default_factory=dict)
+    extra: dict[str, pa.ChunkedArray] = field(default_factory=dict)
+
+    def where(self, name: str, value: bool = True) -> np.ndarray:
+        """Rows whose boolean extra column ``name`` is ``value``; NULL
+        matches neither, like SQL ``WHEN``."""
+        arr = self.extra[name]
+        if not value:
+            arr = pc.invert(arr)
+        return pc.fill_null(arr, False).to_numpy(zero_copy_only=False)
+
+
+def collect_samples(
+    inputs: list[tuple[DataFrame, list[str], dict[str, Column]]], n: int, seed: int = 42
+) -> list[LocalSample]:
+    """Sample every input with ``deterministic_sample(df, n, seed)`` and
+    collect them all in ONE Spark job. Each ``(df, columns, extra)`` is
+    projected to ``CAST(c AS DOUBLE)`` (numeric dtypes) and
+    ``CAST(c AS STRING)`` per column, plus the ``extra`` name -> Column
+    expressions; several inputs are tagged and unioned into the same
+    Arrow collect. Each sample is a TakeOrdered, so rows arrive in
+    sample order — the order a Spark aggregate over the sample sums in."""
+    projected, layouts = [], []
+    for p, (df, columns, extra) in enumerate(inputs):
+        schema = {f.name: f.dataType for f in df.schema.fields}
+        sample = deterministic_sample(df, n, seed)
+        # SQL text: one py4j call per projected column
+        sql, layout, names = [f"{p} AS __part"], [], {}
+        for i, c in enumerate(columns):
+            v = f"__s{p}v{i}" if is_numeric_type(schema[c]) else None
+            if v is not None:
+                sql.append(f"CAST({sql_ident(c)} AS DOUBLE) AS {v}")
+            sql.append(f"CAST({sql_ident(c)} AS STRING) AS __s{p}k{i}")
+            layout.append((c, f"__s{p}k{i}", v))
+        cols = [F.expr(e) for e in sql]
+        for j, (name, col) in enumerate((extra or {}).items()):
+            cols.append(col.alias(f"__s{p}x{j}"))
+            names[name] = f"__s{p}x{j}"
+        projected.append(sample.select(*cols))
+        layouts.append((layout, names))
+    both = projected[0]
+    for other in projected[1:]:
+        both = both.unionByName(other, allowMissingColumns=True)
+    table = both.toArrow()
+    out = []
+    for p, (layout, names) in enumerate(layouts):
+        t = table.filter(pc.equal(table["__part"], p)) if len(layouts) > 1 else table
+        s = LocalSample(n_rows=t.num_rows)
+        for c, k, v in layout:
+            s.keys[c] = pc.fill_null(t[k], NULL_TOKEN).to_numpy(zero_copy_only=False)
+            s.distinct[c] = pc.count_distinct(t[k]).as_py()
+            if v is not None:
+                s.values[c] = t[v].to_numpy().astype(np.float64, copy=False)
+                s.valid[c] = pc.is_valid(t[v]).to_numpy(zero_copy_only=False)
+        s.extra = {name: t[col] for name, col in names.items()}
+        out.append(s)
+    return out
+
+
+def _spark_min_max(v: np.ndarray) -> tuple[float | None, float | None]:
+    """Spark's MIN/MAX over non-NULL doubles: NaN orders above every
+    number, so one NaN makes MAX NaN while MIN skips it."""
+    if not len(v):
+        return None, None
+    nan = np.isnan(v)
+    if nan.all():
+        return float("nan"), float("nan")
+    return float(v[~nan].min()), float("nan") if nan.any() else float(v.max())
+
+
+def local_profile_columns(
+    sample: LocalSample, columns: list[str], cat_cap: int = 60
+) -> dict[str, ColumnProfile]:
+    """``profile_columns`` over a collected sample, with EXACT distinct
+    counts (the reference's ``nunique``) where Spark uses HLL."""
+    out: dict[str, ColumnProfile] = {}
+    for c in columns:
+        lo, hi = (
+            _spark_min_max(sample.values[c][sample.valid[c]])
+            if c in sample.values else (None, None)
+        )
+        prof = make_profile(c, c in sample.values, sample.distinct[c], lo, hi, cat_cap)
+        if prof is not None:
+            out[c] = prof
+    return out
+
+
+def local_bin_keys(sample: LocalSample, column: str, prof: ColumnProfile, n_bins: int) -> np.ndarray:
+    """``_bin_expr_col`` over a collected column: the same IEEE
+    expression on the same doubles, so the same bin keys."""
+    edges = prof.bin_edges(n_bins)
+    if not (prof.is_numeric and edges is not None):
+        return sample.keys[column]
+    lo, hi = float(prof.vmin), float(prof.vmax)
+    with np.errstate(invalid="ignore", over="ignore"):
+        idx = np.floor((sample.values[column] - lo) * n_bins / (hi - lo))
+    # Spark's FLOOR to BIGINT maps NaN to 0; greatest/least then clamp
+    idx = np.clip(np.nan_to_num(idx, nan=0.0), 0, n_bins - 1).astype(np.int64)
+    labels = np.array(
+        [str(i).rjust(4, "0")[:4] for i in range(n_bins)] + [NULL_TOKEN], dtype=object
+    )
+    return labels[np.where(sample.valid[column], idx, n_bins)]
+
+
+def local_histogram(
+    sample: LocalSample,
+    bindings: list[tuple[str, str, ColumnProfile]],
+    n_bins: int,
+    counts: dict[str, np.ndarray | None],
+) -> pd.DataFrame:
+    """The explode/groupBy kernel over a collected sample: per
+    (attribute, bin), one count column per ``counts`` entry (name -> row
+    mask, None = every row). ``bindings`` are (attribute label, sample
+    column, profile)."""
+    frames = []
+    for attr, column, prof in bindings:
+        uniq, inv = np.unique(local_bin_keys(sample, column, prof, n_bins), return_inverse=True)
+        cols = {"attribute": np.full(len(uniq), attr, dtype=object), "bin": uniq}
+        for name, mask in counts.items():
+            cols[name] = np.bincount(inv if mask is None else inv[mask], minlength=len(uniq))
+        frames.append(pd.DataFrame(cols))
+    if not frames:
+        return pd.DataFrame(columns=["attribute", "bin", *counts])
+    return pd.concat(frames, ignore_index=True)
+
+
+def local_dual_histogram_predicate(
+    sample: LocalSample, keep: np.ndarray, profiles: dict[str, ColumnProfile], n_bins: int = 20
+) -> pd.DataFrame:
+    """``dual_histogram_predicate`` over a collected sample; ``keep`` is
+    the recorded predicate's row mask."""
+    bindings = [(c, c, p) for c, p in profiles.items()]
+    return local_histogram(sample, bindings, n_bins, {"src_cnt": None, "res_cnt": keep})
+
+
+def result_bindings(
+    profiles: dict[str, ColumnProfile],
+    columns: list[str],
+    rename: dict[str, str] | None = None,
+    prefix: str = "",
+) -> list[tuple[str, str, ColumnProfile]]:
+    """(attribute label, result column, profile) per profiled source
+    column that the result carries — under ``rename`` (the join prefix
+    contract), else under its own name."""
+    rename = rename or {}
+    out = []
+    for c, p in profiles.items():
+        rn = rename.get(c, c)
+        name = rn if rn in columns else (c if c in columns else None)
+        if name is not None:
+            out.append((prefix + c, name, p))
+    return out
+
+
+def merge_histograms(src: pd.DataFrame, res: pd.DataFrame) -> pd.DataFrame:
+    """Outer-join (attribute, bin, src_cnt) with (attribute, bin,
+    res_cnt); a side that never saw a bin counts 0 — the sums the union
+    flavor produces."""
+    out = src.merge(res, on=["attribute", "bin"], how="outer")
+    out[["src_cnt", "res_cnt"]] = out[["src_cnt", "res_cnt"]].fillna(0).astype("int64")
+    return out
+
+
+def local_dual_histogram_union(
+    source: LocalSample,
+    result: LocalSample,
+    profiles: dict[str, ColumnProfile],
+    n_bins: int = 20,
+    result_rename: dict[str, str] | None = None,
+) -> pd.DataFrame:
+    """``dual_histogram_union`` with both sides collected."""
+    src = local_histogram(source, [(c, c, p) for c, p in profiles.items()], n_bins, {"src_cnt": None})
+    bindings = result_bindings(profiles, list(result.keys), result_rename)
+    return merge_histograms(src, local_histogram(result, bindings, n_bins, {"res_cnt": None}))
+
+
+def result_histogram(
+    result: DataFrame, bindings: list[tuple[str, str, ColumnProfile]], n_bins: int = 20
+) -> pd.DataFrame:
+    """(attribute, bin, res_cnt) over the FULL ``result`` — the only
+    full-data pass of a sampled join explanation: one grouped Spark
+    query, bins bound to the result's own column names. No ``fan_out``:
+    its ``.rdd`` probe plans and runs a join result's broadcast stage
+    just to count partitions."""
+    if not bindings:
+        return pd.DataFrame(columns=["attribute", "bin", "res_cnt"])
+    structs = ", ".join(
+        f"named_struct('attribute', {sql_literal(a)}, 'bin', {_bin_sql(n, p, n_bins)})"
+        for a, n, p in bindings
+    )
+    return (
+        result.select(F.expr(f"explode(array({structs})) AS s"))
+        .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"))
+        .agg(F.count(F.lit(1)).alias("res_cnt"))
+        .toPandas()
+    )
 
 
 def shapley_dual_histograms_weighted(
@@ -352,9 +615,6 @@ def shapley_dual_histograms(
     could collide when both sides contribute the same source name."""
     from ..operators.partitioning import fan_out
 
-    left_rename = left_rename or {}
-    right_rename = right_rename or {}
-
     def side_branch(df: DataFrame, profiles, prefix: str) -> DataFrame:
         avail = [c for c in profiles if c in df.columns]
         sel = fan_out(df.select(*[F.col(c) for c in avail]))
@@ -367,16 +627,11 @@ def shapley_dual_histograms(
         ]
         return sel.select(F.explode(F.array(*structs)).alias("s"), F.lit(0).alias("__side"))
 
-    pairs = []  # (prefixed attribute, result column name, profile)
-    for profiles, rename, prefix in (
-        (left_profiles, left_rename, "left:"),
-        (right_profiles, right_rename, "right:"),
-    ):
-        for c, p in profiles.items():
-            rn = rename.get(c, c)
-            name = rn if rn in result.columns else (c if c in result.columns else None)
-            if name is not None:
-                pairs.append((prefix + c, name, p))
+    cols = result.columns
+    pairs = (  # (prefixed attribute, result column name, profile)
+        result_bindings(left_profiles, cols, left_rename, "left:")
+        + result_bindings(right_profiles, cols, right_rename, "right:")
+    )
     res_sel = fan_out(result.select(*sorted({n for _, n, _ in pairs})))
     res_structs = [
         F.struct(

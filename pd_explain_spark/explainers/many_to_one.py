@@ -22,15 +22,23 @@ Reference pipeline re-expressed Spark-first
     (ibid:240-309; implemented in _geometry_label_order below — PCA and
     silhouette computed numpy-side on the same <= sample_size
     deterministic sample the reference uses).
- 3. optional deterministic sampling, seed 42, ~sample_size rows
-    (ibid:311-333) — default ON to mirror the reference; full-data mode
-    is one flag away and uses the same distributed passes.
+ 3. optional deterministic sampling, seed 42, exactly sample_size rows
+    (ibid:311-333) — default ON to mirror the reference. The label
+    counts of step 2 stay one Spark job over the FULL labeled frame; the
+    sample is then ONE Spark projection + Arrow collect
+    (``collect_samples``), and steps 4-5 run in driver numpy on it.
+    Full-data mode (``use_sampling=False``) runs steps 4-5 as the
+    distributed passes below.
  4. discretize candidate attributes with the shared histogram profile
-    (numeric -> equi-width bins, categorical -> value); rank attributes
-    by information gain about the label, computed for ALL attributes in
-    ONE exploded groupBy pass; keep the top
-    ``max_explanation_length * p_value`` (budget rule, ibid:144-158).
- 5. level-wise rule search (lengths 1..max_explanation_length). Each
+    (numeric -> equi-width bins, categorical -> value; sampled profiles
+    count EXACT distinct values, the reference's ``nunique`` rule, where
+    the Spark profile uses HLL); rank attributes by information gain
+    about the label, computed for ALL attributes from one joint
+    (attribute, bin, label) histogram — ONE exploded groupBy pass in
+    full-data mode; keep the top ``max_explanation_length * p_value``
+    (budget rule, ibid:144-158).
+ 5. level-wise rule search (lengths 1..max_explanation_length). Sampled:
+    vectorized numpy masks over the collected rows. Full data: each
     level evaluates every candidate conjunction for EVERY cluster in one
     ``groupBy(label)`` aggregation with batched conditional counts
     (chunked to keep codegen happy) — SURVEY §4 custom-physical #3: no
@@ -53,7 +61,15 @@ from pyspark.sql import functions as F
 from ..operators.aggregates import is_numeric_type
 from ..operators.sampling import maybe_sample
 from .base import Explanation, ExplanationItem, ExplainerBase
-from .histograms import NULL_TOKEN, ColumnProfile, profile_columns
+from .histograms import (
+    NULL_TOKEN,
+    ColumnProfile,
+    LocalSample,
+    collect_samples,
+    local_bin_keys,
+    local_profile_columns,
+    profile_columns,
+)
 
 RANDOM_SEED = 42  # reference many_to_one_explainer.py:16
 DEFAULT_SAMPLE = 5000  # ibid:15,326-333
@@ -240,9 +256,12 @@ class ManyToOneExplainer(ExplainerBase):
                     )
         labeled = df.withColumn("__label", label_col.cast("string"))
 
-        counts = (
-            labeled.groupBy("__label").count().orderBy(F.desc("count"), "__label")
-        ).collect()
+        # sorted on the driver: a Spark orderBy would add range-sampling
+        # and shuffle jobs to order a handful of rows
+        counts = sorted(
+            labeled.groupBy("__label").count().collect(),
+            key=lambda r: (-r["count"], r["__label"]),
+        )
         if self.label_pruning == "smallest":
             counts = sorted(counts, key=lambda r: (r["count"], r["__label"]))
         elif self.label_pruning == "random":
@@ -339,27 +358,48 @@ class ManyToOneExplainer(ExplainerBase):
         return sorted(uniq, key=lambda l: (-means[l] if reverse else means[l], l))
 
     # -- attribute selection -------------------------------------------------
-    def _rank_attributes(
-        self, labeled: DataFrame, profiles: dict[str, ColumnProfile]
-    ) -> tuple[list[str], "object"]:
-        """Info gain of each binned attribute about the label, all attributes
-        in one exploded groupBy pass. Returns (ranked attrs, joint pandas
-        histogram (attribute, bin, __label, cnt))."""
+    def _joint_histogram(self, labeled: DataFrame, profiles: dict[str, ColumnProfile]):
+        """Joint pandas histogram (attribute, bin, __label, cnt), all
+        attributes in one exploded groupBy pass."""
         from .histograms import _bin_expr
 
         structs = [
             F.struct(F.lit(c).alias("attribute"), _bin_expr(labeled, p, self.n_bins).alias("bin"))
             for c, p in profiles.items()
         ]
-        joint = (
+        return (
             labeled.select(F.explode(F.array(*structs)).alias("s"), "__label")
             .groupBy(F.col("s.attribute").alias("attribute"), F.col("s.bin").alias("bin"), "__label")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .toPandas()
         )
+
+    def _joint_histogram_local(self, sample: LocalSample, profiles: dict[str, ColumnProfile]):
+        """``_joint_histogram`` over the collected sample, rows sorted by
+        (attribute, bin, __label)."""
+        import pandas as pd
+
+        labels = sample.extra["__label"].to_numpy(zero_copy_only=False)
+        frames = [
+            pd.DataFrame({"attribute": c, "bin": local_bin_keys(sample, c, p, self.n_bins),
+                          "__label": labels})
+            for c, p in profiles.items()
+        ]
+        if not frames:
+            return pd.DataFrame(columns=["attribute", "bin", "__label", "cnt"])
+        return (
+            pd.concat(frames, ignore_index=True)
+            .groupby(["attribute", "bin", "__label"], sort=True)
+            .size()
+            .reset_index(name="cnt")
+        )
+
+    def _rank_attributes(self, joint, profiles: dict[str, ColumnProfile]) -> list[str]:
+        """Attributes ranked by info gain about the label, from the joint
+        (attribute, bin, __label, cnt) histogram."""
         total = joint[joint.attribute == joint.attribute.iloc[0]].cnt.sum() if len(joint) else 0
         if total == 0:
-            return [], joint
+            return []
 
         def entropy(counts) -> float:
             s = counts.sum()
@@ -378,8 +418,7 @@ class ManyToOneExplainer(ExplainerBase):
                 h_cond += w * entropy(bin_sub.cnt)
             gains[attr] = h_label - h_cond
         budget = max(1, self.max_len * self.p_value)
-        ranked = sorted(gains, key=lambda a: (-gains[a], a))[:budget]
-        return ranked, joint
+        return sorted(gains, key=lambda a: (-gains[a], a))[:budget]
 
     def _compatible(self, rule: Rule, atom: Atom) -> bool:
         """Keep extensions meaningful: in conj mode an attribute may appear
@@ -472,23 +511,24 @@ class ManyToOneExplainer(ExplainerBase):
 
     # -- main ----------------------------------------------------------------
     def generate_explanation(self) -> Explanation:
-        import pandas as pd
-
         self._label_source_cols = []
         labeled, labels = self._labeled_df()
-        labeled = maybe_sample(labeled, self.use_sampling, self.sample_size, RANDOM_SEED)
+        label_like = set(self._label_source_cols) | {self._label_col_name, "__label"}
+        candidates = [
+            c
+            for c in (self.attributes or labeled.columns)
+            if c not in label_like and c in labeled.columns
+        ]
+        self._local_eval_state = None
+        self._atom_mask_cache = {}
+        if self.use_sampling:
+            return self._explain_sampled(labeled, labels, candidates)
         labeled = labeled.cache()
         binned = None
-        label_like = set(self._label_source_cols) | {self._label_col_name, "__label"}
         try:
-            candidates = [
-                c
-                for c in (self.attributes or labeled.columns)
-                if c not in label_like and c != "__label" and c in labeled.columns
-            ]
             profiles = profile_columns(labeled, candidates)
-            ranked, joint = self._rank_attributes(labeled, profiles)
-            profiles = {a: profiles[a] for a in ranked}
+            joint = self._joint_histogram(labeled, profiles)
+            profiles = {a: profiles[a] for a in self._rank_attributes(joint, profiles)}
 
             # evaluation projection: raw numeric columns (threshold atoms)
             # + one string bin column per categorical attribute
@@ -499,198 +539,216 @@ class ManyToOneExplainer(ExplainerBase):
                 else:
                     cols.append(F.coalesce(labeled[a].cast("string"), F.lit(NULL_TOKEN)).alias(f"__bin_{a}"))
             binned = labeled.select(*cols).cache()
-            self._local_eval_state = None
-            self._atom_mask_cache = {}
-            if self.use_sampling:
-                # sample-bounded -> collect ONCE, evaluate all levels in numpy
-                import numpy as np
-
-                pdf = binned.toPandas()
-                label_names = sorted(pdf["__label"].dropna().unique().tolist())
-                code_of = {l: i for i, l in enumerate(label_names)}
-                codes = pdf["__label"].map(code_of).to_numpy()
-                self._local_eval_state = (pdf, codes, len(label_names), label_names)
-                cluster_sizes = {
-                    l: int((codes == i).sum()) for l, i in code_of.items()
-                }
-            else:
-                # _labeled_df's pruning job already counted every kept
-                # label over the same rows (use_sampling=False means
-                # maybe_sample was the identity and binned is a
-                # row-preserving projection) — one full-scan job saved
-                cluster_sizes = {l: self._label_counts[l] for l in labels}
-            total_rows = sum(cluster_sizes.values())
-
-            # level-1 atoms: numeric -> one-sided splits at each interior bin
-            # edge (decision-tree style); categorical -> equality per value
-            atoms: list[Atom] = []
-            for a, p in profiles.items():
-                if p.is_numeric:
-                    edges = p.bin_edges(self.n_bins) or []
-                    for e in edges[1:-1]:
-                        atoms.append(Atom(a, "le", e))
-                        atoms.append(Atom(a, "gt", e))
-                else:
-                    for v in (
-                        joint[joint.attribute == a]["bin"].drop_duplicates().tolist()
-                    ):
-                        atoms.append(Atom(a, "eq", v))
-            level: list[Rule] = [(a,) for a in atoms]
-            results: list[tuple[str, Rule, float, float]] = []
-            origins: dict[tuple[str, Rule], dict[str, int]] = {}
-            solved: set[str] = set()  # clusters with enough rules already
-            # per-cluster promising atoms (filled after level 1) — extensions
-            # draw from these, not the full atom set
-            good_atoms: dict[str, list[Atom]] = {c: [] for c in labels}
-            max_level_rules = 40 * len(labels) * self.beam_width // 10 or 1000
-
-            for depth in range(1, self.max_len + 1):
-                if not level:
-                    break
-                counts = (
-                    self._evaluate_rules_local(level)
-                    if self._local_eval_state is not None
-                    else self._evaluate_rules(binned, level)
-                )
-                next_seeds: dict[str, list[tuple[float, Rule]]] = {c: [] for c in labels}
-                atom_quality: dict[str, list[tuple[float, Atom]]] = {c: [] for c in labels}
-                for rule, per_label in counts.items():
-                    matched_total = sum(per_label.values())
-                    if matched_total == 0:
-                        continue
-                    for cluster in labels:
-                        in_c = per_label.get(cluster, 0)
-                        size_c = cluster_sizes.get(cluster, 0)
-                        if size_c == 0:
-                            continue
-                        coverage = in_c / size_c
-                        separation = (matched_total - in_c) / matched_total
-                        if depth == 1:
-                            # precision-x-recall proxy ranks extension atoms
-                            atom_quality[cluster].append(
-                                ((1.0 - separation) * coverage, rule[0])
-                            )
-                        good_cov = coverage >= self.coverage_threshold
-                        good_sep = separation <= self.separation_threshold
-                        if good_cov and good_sep:
-                            results.append((cluster, rule, coverage, separation))
-                            # error-origin breakdown (reference
-                            # many_to_one_explainer.py:497-541): which other
-                            # groups the rule's false matches come from
-                            err_total = matched_total - in_c
-                            origins[(cluster, rule)] = {
-                                lbl: c
-                                for lbl, c in per_label.items()
-                                if lbl != cluster and c > 0
-                            } if err_total else {}
-                        elif depth < self.max_len:
-                            # conj shrinks matches (improves separation, costs
-                            # coverage); disj grows matches (improves coverage)
-                            if self.mode == "conj" and good_cov:
-                                next_seeds[cluster].append((separation, rule))
-                            elif self.mode == "disj" and good_sep:
-                                next_seeds[cluster].append((-coverage, rule))
-                if depth == 1:
-                    for c, scored in atom_quality.items():
-                        scored.sort(key=lambda t: (-t[0], t[1].attribute, t[1].kind, str(t[1].value)))
-                        good_atoms[c] = [a for _, a in scored[:30]]
-                for c, _r, _cov, _sep in results:
-                    if sum(1 for cc, *_ in results if cc == c) >= self.top_k:
-                        solved.add(c)
-                if depth >= self.max_len:
-                    break
-                # beam: extend the best failing rules per unsolved cluster,
-                # drawing only from that cluster's promising atoms
-                seen: set[Rule] = set()
-                nxt: list[Rule] = []
-                for cluster, seeds in next_seeds.items():
-                    if cluster in solved:
-                        continue
-                    seeds.sort(key=lambda t: t[0])
-                    for _, rule in seeds[: self.beam_width]:
-                        for atom in good_atoms[cluster]:
-                            if atom in rule or not self._compatible(rule, atom):
-                                continue
-                            ext = tuple(
-                                sorted(rule + (atom,), key=lambda a: (a.attribute, a.kind, str(a.value)))
-                            )
-                            if ext not in seen:
-                                seen.add(ext)
-                                nxt.append(ext)
-                level = nxt[:max_level_rules]
-
-            def _error_text(c, r, sep: float) -> str:
-                if sep == 0:
-                    return "Rule has no separation error."
-                org = origins.get((c, r), {})
-                total = sum(org.values())
-                if not total:
-                    return "Rule has no separation error."
-                parts = [
-                    f"{cnt / total:.0%} of error originates from group {lbl}"
-                    for lbl, cnt in sorted(org.items(), key=lambda t: (-t[1], t[0]))[:4]
-                ]
-                return ", ".join(parts)
-
-            rows = [
-                {
-                    "Cluster": c,
-                    "rule": _rule_human(r, self.mode),
-                    "coverage": round(cov, 6),
-                    "separation_err": round(sep, 6),
-                    "length": len(r),
-                    "error_explanation": _error_text(c, r, sep),
-                }
-                for c, r, cov, sep in results
-            ]
-            self.rules_df = pd.DataFrame(
-                rows,
-                columns=[
-                    "Cluster", "rule", "coverage", "separation_err", "length",
-                    "error_explanation",
-                ],
-            )
-            if len(self.rules_df):
-                # conciseness: prefer shortest, then best separation, then coverage
-                self.rules_df = (
-                    self.rules_df.sort_values(
-                        ["Cluster", "length", "separation_err", "coverage", "rule"],
-                        ascending=[True, True, True, False, True],
-                    )
-                    .groupby("Cluster", as_index=False)
-                    .head(self.top_k)
-                    .reset_index(drop=True)
-                )
-
-            items = [
-                ExplanationItem(
-                    attribute=str(rec.Cluster),
-                    bin=rec.rule,
-                    influence=float(rec.coverage),
-                    score=float(1.0 - rec.separation_err),
-                    explanation=(
-                        f"the group {rec.Cluster} is characterized by ({rec.rule}) "
-                        f"— coverage {rec.coverage:.0%}, separation error {rec.separation_err:.0%}"
-                    ),
-                    viz={
-                        "kind": "rule-bar",
-                        "labels": ["coverage", "separation_err"],
-                        "values": [float(rec.coverage), float(rec.separation_err)],
-                        "highlight": 0,
-                    },
-                )
-                for rec in self.rules_df.itertuples()
-            ]
-            return Explanation(
-                kind="many_to_one",
-                query=f"{self.frame.name}.explain(many_to_one, labels={self._labels_repr()})",
-                items=items,
-                extras={"rules": self.rules_df, "clusters": labels, "total_rows": total_rows},
-            )
+            # _labeled_df's pruning job already counted every kept label
+            # over the same rows (binned is a row-preserving projection of
+            # labeled) — one full-scan job saved
+            cluster_sizes = {l: self._label_counts[l] for l in labels}
+            return self._mine(profiles, joint, labels, cluster_sizes, binned)
         finally:
             labeled.unpersist()
             if binned is not None:
                 binned.unpersist()
+
+    def _explain_sampled(self, labeled: DataFrame, labels: list[str], candidates: list[str]) -> Explanation:
+        """Steps 4-5 on the <= sample_size-row sample: ONE Spark
+        projection + collect, then profile, ranking and every rule level
+        in numpy."""
+        import pandas as pd
+
+        [sample] = collect_samples(
+            [(labeled, candidates, {"__label": F.col("__label")})], self.sample_size, RANDOM_SEED
+        )
+        profiles = local_profile_columns(sample, candidates)
+        joint = self._joint_histogram_local(sample, profiles)
+        profiles = {a: profiles[a] for a in self._rank_attributes(joint, profiles)}
+        # the evaluation frame: raw numeric columns (threshold atoms) + one
+        # string bin column per categorical attribute
+        data = {"__label": sample.extra["__label"].to_numpy(zero_copy_only=False)}
+        for a, p in profiles.items():
+            if p.is_numeric:
+                data[a] = sample.values[a]
+            else:
+                data[f"__bin_{a}"] = sample.keys[a]
+        pdf = pd.DataFrame(data)
+        label_names = sorted(pdf["__label"].dropna().unique().tolist())
+        code_of = {l: i for i, l in enumerate(label_names)}
+        codes = pdf["__label"].map(code_of).to_numpy()
+        self._local_eval_state = (pdf, codes, len(label_names), label_names)
+        cluster_sizes = {l: int((codes == i).sum()) for l, i in code_of.items()}
+        return self._mine(profiles, joint, labels, cluster_sizes, None)
+
+    def _mine(self, profiles, joint, labels, cluster_sizes, binned) -> Explanation:
+        """Level-wise rule search + the rules table (step 5)."""
+        import pandas as pd
+
+        total_rows = sum(cluster_sizes.values())
+
+        # level-1 atoms: numeric -> one-sided splits at each interior bin
+        # edge (decision-tree style); categorical -> equality per value
+        atoms: list[Atom] = []
+        for a, p in profiles.items():
+            if p.is_numeric:
+                edges = p.bin_edges(self.n_bins) or []
+                for e in edges[1:-1]:
+                    atoms.append(Atom(a, "le", e))
+                    atoms.append(Atom(a, "gt", e))
+            else:
+                for v in (
+                    joint[joint.attribute == a]["bin"].drop_duplicates().tolist()
+                ):
+                    atoms.append(Atom(a, "eq", v))
+        level: list[Rule] = [(a,) for a in atoms]
+        results: list[tuple[str, Rule, float, float]] = []
+        origins: dict[tuple[str, Rule], dict[str, int]] = {}
+        solved: set[str] = set()  # clusters with enough rules already
+        # per-cluster promising atoms (filled after level 1) — extensions
+        # draw from these, not the full atom set
+        good_atoms: dict[str, list[Atom]] = {c: [] for c in labels}
+        max_level_rules = 40 * len(labels) * self.beam_width // 10 or 1000
+
+        for depth in range(1, self.max_len + 1):
+            if not level:
+                break
+            counts = (
+                self._evaluate_rules_local(level)
+                if self._local_eval_state is not None
+                else self._evaluate_rules(binned, level)
+            )
+            next_seeds: dict[str, list[tuple[float, Rule]]] = {c: [] for c in labels}
+            atom_quality: dict[str, list[tuple[float, Atom]]] = {c: [] for c in labels}
+            for rule, per_label in counts.items():
+                matched_total = sum(per_label.values())
+                if matched_total == 0:
+                    continue
+                for cluster in labels:
+                    in_c = per_label.get(cluster, 0)
+                    size_c = cluster_sizes.get(cluster, 0)
+                    if size_c == 0:
+                        continue
+                    coverage = in_c / size_c
+                    separation = (matched_total - in_c) / matched_total
+                    if depth == 1:
+                        # precision-x-recall proxy ranks extension atoms
+                        atom_quality[cluster].append(
+                            ((1.0 - separation) * coverage, rule[0])
+                        )
+                    good_cov = coverage >= self.coverage_threshold
+                    good_sep = separation <= self.separation_threshold
+                    if good_cov and good_sep:
+                        results.append((cluster, rule, coverage, separation))
+                        # error-origin breakdown (reference
+                        # many_to_one_explainer.py:497-541): which other
+                        # groups the rule's false matches come from
+                        err_total = matched_total - in_c
+                        origins[(cluster, rule)] = {
+                            lbl: c
+                            for lbl, c in per_label.items()
+                            if lbl != cluster and c > 0
+                        } if err_total else {}
+                    elif depth < self.max_len:
+                        # conj shrinks matches (improves separation, costs
+                        # coverage); disj grows matches (improves coverage)
+                        if self.mode == "conj" and good_cov:
+                            next_seeds[cluster].append((separation, rule))
+                        elif self.mode == "disj" and good_sep:
+                            next_seeds[cluster].append((-coverage, rule))
+            if depth == 1:
+                for c, scored in atom_quality.items():
+                    scored.sort(key=lambda t: (-t[0], t[1].attribute, t[1].kind, str(t[1].value)))
+                    good_atoms[c] = [a for _, a in scored[:30]]
+            for c, _r, _cov, _sep in results:
+                if sum(1 for cc, *_ in results if cc == c) >= self.top_k:
+                    solved.add(c)
+            if depth >= self.max_len:
+                break
+            # beam: extend the best failing rules per unsolved cluster,
+            # drawing only from that cluster's promising atoms
+            seen: set[Rule] = set()
+            nxt: list[Rule] = []
+            for cluster, seeds in next_seeds.items():
+                if cluster in solved:
+                    continue
+                seeds.sort(key=lambda t: t[0])
+                for _, rule in seeds[: self.beam_width]:
+                    for atom in good_atoms[cluster]:
+                        if atom in rule or not self._compatible(rule, atom):
+                            continue
+                        ext = tuple(
+                            sorted(rule + (atom,), key=lambda a: (a.attribute, a.kind, str(a.value)))
+                        )
+                        if ext not in seen:
+                            seen.add(ext)
+                            nxt.append(ext)
+            level = nxt[:max_level_rules]
+
+        def _error_text(c, r, sep: float) -> str:
+            if sep == 0:
+                return "Rule has no separation error."
+            org = origins.get((c, r), {})
+            total = sum(org.values())
+            if not total:
+                return "Rule has no separation error."
+            parts = [
+                f"{cnt / total:.0%} of error originates from group {lbl}"
+                for lbl, cnt in sorted(org.items(), key=lambda t: (-t[1], t[0]))[:4]
+            ]
+            return ", ".join(parts)
+
+        rows = [
+            {
+                "Cluster": c,
+                "rule": _rule_human(r, self.mode),
+                "coverage": round(cov, 6),
+                "separation_err": round(sep, 6),
+                "length": len(r),
+                "error_explanation": _error_text(c, r, sep),
+            }
+            for c, r, cov, sep in results
+        ]
+        self.rules_df = pd.DataFrame(
+            rows,
+            columns=[
+                "Cluster", "rule", "coverage", "separation_err", "length",
+                "error_explanation",
+            ],
+        )
+        if len(self.rules_df):
+            # conciseness: prefer shortest, then best separation, then coverage
+            self.rules_df = (
+                self.rules_df.sort_values(
+                    ["Cluster", "length", "separation_err", "coverage", "rule"],
+                    ascending=[True, True, True, False, True],
+                )
+                .groupby("Cluster", as_index=False)
+                .head(self.top_k)
+                .reset_index(drop=True)
+            )
+
+        items = [
+            ExplanationItem(
+                attribute=str(rec.Cluster),
+                bin=rec.rule,
+                influence=float(rec.coverage),
+                score=float(1.0 - rec.separation_err),
+                explanation=(
+                    f"the group {rec.Cluster} is characterized by ({rec.rule}) "
+                    f"— coverage {rec.coverage:.0%}, separation error {rec.separation_err:.0%}"
+                ),
+                viz={
+                    "kind": "rule-bar",
+                    "labels": ["coverage", "separation_err"],
+                    "values": [float(rec.coverage), float(rec.separation_err)],
+                    "highlight": 0,
+                },
+            )
+            for rec in self.rules_df.itertuples()
+        ]
+        return Explanation(
+            kind="many_to_one",
+            query=f"{self.frame.name}.explain(many_to_one, labels={self._labels_repr()})",
+            items=items,
+            extras={"rules": self.rules_df, "clusters": labels, "total_rows": total_rows},
+        )
 
 
 def many_to_one_kernel_table(

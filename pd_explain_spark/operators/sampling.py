@@ -16,12 +16,67 @@ this out; the fix is a hash-ordered top-n:
 * scale-safe — Spark executes orderBy+limit as TakeOrdered (per-partition
   top-n, then a driver-side merge of n*partitions candidates), so no full
   sort and no full shuffle even on a 100 TB input.
+
+Spark refuses to hash MAP values (``DATATYPE_MISMATCH.HASH_MAP_TYPE``), so
+a map reaches the hash as its entries sorted by key — the same value for
+the same map whatever its insertion order. Every other column is hashed
+as itself, so samples of map-free frames are unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _has_map(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.MapType):
+        return True
+    if isinstance(dtype, T.ArrayType):
+        return _has_map(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_has_map(f.dataType) for f in dtype.fields)
+    return False
+
+
+def _hashable(e: str, dtype: T.DataType, depth: int = 0) -> str:
+    """SQL for ``e`` with every nested map replaced by its key-sorted
+    entry array (map keys cannot hold maps in Spark)."""
+    if not _has_map(dtype):
+        return e
+    x = f"__e{depth}"
+    if isinstance(dtype, T.MapType):
+        entries = f"map_entries({e})"
+        if _has_map(dtype.valueType):
+            value = _hashable(f"{x}.value", dtype.valueType, depth + 1)
+            entries = f"transform({entries}, {x} -> named_struct('key', {x}.key, 'value', {value}))"
+        return f"array_sort({entries})"
+    if isinstance(dtype, T.ArrayType):
+        return f"transform({e}, {x} -> {_hashable(x, dtype.elementType, depth + 1)})"
+    fields = ", ".join(
+        f"{sql_literal(f.name)}, {_hashable(f'{e}.{sql_ident(f.name)}', f.dataType, depth + 1)}"
+        for f in dtype.fields
+    )
+    return f"CASE WHEN {e} IS NULL THEN NULL ELSE named_struct({fields}) END"
+
+
+def _row_hash(df: DataFrame, seed: int) -> Column:
+    """Seeded xxhash64 of the full row (see the module docstring for
+    maps), built as one SQL expression: one parse on the JVM instead of
+    a py4j round trip per column."""
+    cols = [_hashable(sql_ident(f.name), f.dataType) for f in df.schema.fields]
+    return F.expr(f"xxhash64({', '.join(cols)}, {int(seed)})")
 
 
 def deterministic_sample(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
@@ -30,8 +85,7 @@ def deterministic_sample(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
     Rows are ranked by a seeded xxhash64 of the full row; ties (exact
     duplicate rows) are benign — any n of them are interchangeable.
     """
-    key = F.xxhash64(*[F.col(c) for c in df.columns], F.lit(seed))
-    return df.orderBy(key).limit(n)
+    return df.orderBy(_row_hash(df, seed)).limit(n)
 
 
 def maybe_sample(df: DataFrame, use_sampling: bool, n: int, seed: int = 42) -> DataFrame:
@@ -57,7 +111,7 @@ def weighted_sample(df: DataFrame, n: int, weight_col: str, seed: int = 42) -> D
     (pandas raises; validating here would cost an extra pass)."""
     big = float(2**61)
     u = (
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns], F.lit(seed)), F.lit(2**61))
+        F.pmod(_row_hash(df, seed), F.lit(2**61))
         + F.lit(0.5)
     ) / F.lit(big)
     w = F.col(weight_col).cast("double")
